@@ -113,9 +113,12 @@ def _epoch(col):
 # Core feast semantics: PIT/as-of join, dedup, windows, sessions
 # --------------------------------------------------------------------------
 
-def q_pit_latest_click(spark: SparkSession, sf_dir: str, strategy: str = "join_dedup") -> DataFrame:
+def q_pit_latest_click(
+    spark: SparkSession, sf_dir: str, spine_partitions: int | None = None
+) -> DataFrame:
     """As-of join: for each purchase event, the latest click value of the
-    same user within a 7-day TTL."""
+    same user within a 7-day TTL. ``spine_partitions`` round-robin
+    repartitions the spine first."""
     from feast_spark.operators.asof_join import point_in_time_join
 
     ev = _events(spark, sf_dir)
@@ -124,6 +127,8 @@ def q_pit_latest_click(spark: SparkSession, sf_dir: str, strategy: str = "join_d
         "user_id",
         F.col("ts").alias("event_timestamp"),
     )
+    if spine_partitions:
+        spine = spine.repartition(spine_partitions)
     clicks = ev.filter("event_type = 'click'").select(
         "user_id",
         F.col("ts").alias("event_timestamp"),
@@ -136,7 +141,6 @@ def q_pit_latest_click(spark: SparkSession, sf_dir: str, strategy: str = "join_d
         ["user_id"],
         ["click_value"],
         ttl_seconds=TTL_7D,
-        strategy=strategy,
         tie_breaker_cols=["event_id"],
     )
     return out.select(
@@ -162,10 +166,10 @@ FROM spine s LEFT JOIN (SELECT sid, value FROM ranked WHERE rn = 1) r ON s.sid =
 """
 
 
-def q_pit_merge_asof(spark, sf_dir):
-    """Same semantics via the cogrouped sorted-merge (Arrow merge_asof)
-    physical strategy — shares the join_dedup oracle."""
-    return q_pit_latest_click(spark, sf_dir, strategy="merge_asof")
+def q_pit_round_robin_spine(spark, sf_dir):
+    """`pit_latest_click` over a round-robin repartitioned spine, whose
+    row order differs between evaluations — shares its oracle."""
+    return q_pit_latest_click(spark, sf_dir, spine_partitions=8)
 
 
 def q_pit_multi_view(spark, sf_dir):
@@ -1381,12 +1385,9 @@ def q_entityless(spark, sf_dir):
 
 
 def q_entityless_range(spark, sf_dir):
-    """The same entityless as-of as `entityless`, on the fully
-    distributed range_union physical strategy (range-partitioned
-    union + per-partition carry-in — no single-task stage at ANY
-    spine size, closing the merge_asof path's documented one-group
-    bound). Shares `entityless`'s oracle: the two driver rows
-    together pin cross-strategy equivalence at the gate."""
+    """The same entityless as-of as `entityless`, called on the
+    operator directly instead of through FeatureStore (no spine-window
+    pruning of the feature scan). Shares `entityless`'s oracle."""
     from feast_spark.operators.asof_join import point_in_time_join
 
     ev = _events(spark, sf_dir)
@@ -1407,7 +1408,6 @@ def q_entityless_range(spark, sf_dir):
         ["error_value"],
         created_col="created",
         ttl_seconds=TTL_7D,
-        strategy="range_union",
     )
     return out.select(
         "spine_id",
@@ -3228,7 +3228,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_repetition": q_ngram_repetition,
         "unigram_logprob": q_unigram_logprob,
         "pit_latest_click": q_pit_latest_click,
-        "pit_merge_asof": q_pit_merge_asof,
+        "pit_merge_asof": q_pit_round_robin_spine,
         "pit_multi_view": q_pit_multi_view,
         "pull_latest": q_pull_latest,
         "lag_lead": q_lag_lead,

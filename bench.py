@@ -48,10 +48,6 @@ SPINE_ROWS = int(os.environ.get("BENCH_SPINE_ROWS", "400000"))
 # scaling gate's default — fixed per-job overhead amortizes to <10%
 TP_SEQ_DOCS = int(os.environ.get("BENCH_TP_SEQ_DOCS", "500000"))
 TP_SPINE_ROWS = int(os.environ.get("BENCH_TP_SPINE_ROWS", "4000000"))
-# join_dedup (Catalyst-native) A/B-measured faster than merge_asof on
-# this box AND scales 0.94 from 2->8 cores; merge_asof remains the
-# per-query benchmark entry and the hot-key-fan-out scale path
-STRATEGY = os.environ.get("BENCH_STRATEGY", "join_dedup")
 
 
 def _noop_write(df) -> None:
@@ -62,10 +58,8 @@ def _noop_write(df) -> None:
 def headline_job(
     spark, seq_docs: int = SEQ_DOCS, spine_rows: int = SPINE_ROWS
 ) -> tuple[float, int]:
-    """PIT as-of join (strategy $BENCH_STRATEGY, default join_dedup —
-    the Catalyst conditional-join path; merge_asof is the opt-in
-    hot-key-fan-out variant) of the spine against the token-sequence
-    table + windowed feature engineering, materialized. Returns
+    """PIT as-of join of the spine against the token-sequence table +
+    windowed feature engineering, materialized. Returns
     (seconds, spine_rows)."""
     from pyspark.sql import functions as F
 
@@ -84,7 +78,6 @@ def headline_job(
         ["tokens", "n_tok", "source"],
         created_col="created",
         ttl_seconds=3 * 86400,
-        strategy=STRATEGY,
     )
     feats = lag_lead_features(
         joined.filter(F.col("n_tok").isNotNull()),

@@ -17,280 +17,37 @@ For each spine row ``(entity keys, event_timestamp)``:
   preservation, dask.py:736-756),
 * output has exactly one row per spine row (multiplicity preserved).
 
-Physical strategies (selectable, all produce identical results):
+Algorithm — one physical path, a tagged union with a running last
+(the pattern of Tempo's ``asofJoin``):
 
-* ``join_dedup`` — conditional equi-join on keys + θ time filter, then
-  ``row_number()`` window dedup per spine row. Catalyst-native: the time
-  bounds push into the scan, AQE handles skew. Mirrors the reference's
-  SQL-template plan but as DataFrame ops.
-* ``merge_asof`` — cogrouped sorted-merge: both sides shuffled once by
-  entity key, then a vectorized Arrow-batched ``pd.merge_asof`` per
-  cogroup. One shuffle per side, no join explosion on hot keys with many
-  candidate rows. This is the scale path (the Ray store's windowed
-  sorted-merge, ray.py:799-920, reimagined on Spark cogroup).
-* ``broadcast`` — ``join_dedup`` with an explicit broadcast hint on the
-  feature side for small dimension tables (Ray's 100 MB threshold path,
-  ray.py:437-448).
+* feature rows become ``(keys, ts, struct(ts, created, tie-breaks,
+  payload))``; rows with a NULL key or NULL ts are dropped first — an
+  equi-join never matched them, but a window partition would put NULL
+  keys of both sides together;
+* spine rows become ``(keys, ts, struct(every spine column))``, so
+  exact-duplicate spine rows stay separate rows without a row id;
+* the two are unioned and, per key, ordered by ``(ts, features before
+  spine, created asc nulls first, tie-breaks asc nulls first)``; the
+  running ``last(feature struct, ignorenulls=True)`` at a spine row is
+  exactly the latest feature row at or before it, max-created on ties;
+* spine rows are kept and unpacked, and a match older than the TTL is
+  NULLed.
 
-Scale notes (100 TB design): both sides arrive partitioned by entity
-key; ``merge_asof`` performs exactly one hash shuffle per input and a
-linear merge per group — no quadratic blow-up when a hot doc_id has
-thousands of feature versions in the TTL window. ``join_dedup``'s
-intermediate is |matches| rows, which AQE skew-split handles; prefer
-``merge_asof`` when feature-version fan-out per key is large.
+The plan is one hash shuffle of the union on the keys, one sort and one
+streaming window pass — no join, no row id, no Python. A hot key stays
+linear (the pass never pairs spine rows with feature versions). An
+entityless view uses the same window with no partition key: one task
+holds the whole union.
 """
 
 from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-SPINE_ROW_ID = "__feast_spine_row_id"
-_ENTITY_TS_TAG = "__feast_entity_ts"
-DUMMY_ENTITY_COL = "__dummy_id"
-
-
-def _hashable_orderable(dt) -> bool:
-    """True when ``xxhash64``/``orderBy`` accept the type (everything but
-    MapType, recursively)."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.MapType):
-        return False
-    if isinstance(dt, T.ArrayType):
-        return _hashable_orderable(dt.elementType)
-    if isinstance(dt, T.StructType):
-        return all(_hashable_orderable(f.dataType) for f in dt.fields)
-    return True
-
-
-def _with_row_id(spine: DataFrame, assume_unique: bool | str | None = None) -> DataFrame:
-    """Attach a unique internal row id preserving spine multiplicity.
-
-    Idempotent: a pre-stamped spine is returned unchanged, so the id is
-    derived ONCE and every downstream plan branch agrees on it.
-
-    The id is CONTENT-DERIVED, so re-evaluating the expression in
-    independent plan branches (Spark does not share subplans) yields
-    identical row→id assignments even when the spine's lineage contains
-    nondeterministic shuffles (round-robin ``repartition``,
-    AQE-coalesced reads, task retries). ``monotonically_increasing_id``
-    is NOT safe here: it numbers rows by partition/position, and two
-    evaluations of a post-shuffle plan can see different row orders —
-    features silently attach to wrong spine rows (the reference avoids
-    this with a content-concat ``entity_row_unique_id``,
-    spark.py:683-688; we keep its content-derivation property without
-    the string-of-every-column blowup).
-
-    Three physical forms (same contract — every row gets a globally
-    unique, content-deterministic id):
-
-    * GLOBAL WINDOW (default) — ``h`` plus ``row_number`` among
-      equal-hash rows ordered by the full row, so duplicate rows get
-      distinct (interchangeable) ids and hash-colliding distinct rows
-      stay distinguishable. One hash shuffle + sort of the (narrow)
-      spine per plan-branch evaluation. An interleaved A/B (7
-      alternations, bench headline at local[32], see
-      BENCH/BASELINE.md "Row-id A/B") measured this within noise of
-      the map-only form at 400k spine rows — Spark's narrow-row window
-      is NOT the bench bottleneck, so the default keeps the
-      probe-free, duplicate-safe form.
-    * UNIQUE-ROWS FAST PATH (``assume_unique=True``) — the id is two
-      independent ``xxhash64`` values of the row (128 effective bits:
-      P[any collision] ≈ n²/2¹²⁹ ≈ 10⁻¹⁵ at 10¹² rows — a single
-      64-bit hash is NOT enough there, ~27k expected colliding pairs
-      would silently cross-attach features). Pure map-side codegen: NO
-      shuffle, NO sort. At 10¹² spine rows the window form's
-      per-branch full-spine shuffle+sort becomes real money — callers
-      that constructed the spine (e.g. a ``distinct()`` output, a
-      generated grid) should pass the flag. UNSAFE if fully-duplicate
-      rows exist: copies share an id and join-backs explode.
-    * SPLIT PATH (``assume_unique="probe"``) — for huge, ALMOST-unique
-      spines where the flag can't be asserted: one probe aggregation
-      (``groupBy(h) → count > 1``, map-side combinable) finds the
-      duplicated-hash set (tiny), which is broadcast; non-duplicated
-      rows take the map-only fast id and only duplicated rows go
-      through the window — a shuffle of |dup rows|, not |spine|. Fast
-      ids are ``h-h2``, window ids ``h-rownum``; they can never
-      collide because a fast row's ``h`` is by construction not shared
-      with any window row. The probe is an eager job at plan-build
-      time and the union scans the spine twice per branch — measured a
-      net LOSS at bench scale (5.27 s vs 4.06 s median), so it is
-      opt-in for the regime it exists for: spine lineage cheap to
-      re-scan, spine too large to window-sort per branch. CACHING
-      NOTE: the duplicated-hash set is persisted (the returned lazy
-      plan references it from every branch and cannot unpersist it);
-      like the dedup-pipeline persists, batch drivers issuing many
-      probe-stamped joins per session should
-      ``spark.catalog.clearCache()`` between jobs.
-    """
-    if SPINE_ROW_ID in spine.columns:
-        return spine
-    cols = [f.name for f in spine.schema.fields if _hashable_orderable(f.dataType)]
-    if not cols:  # degenerate: no hashable column at all
-        return spine.withColumn(SPINE_ROW_ID, F.monotonically_increasing_id().cast("string"))
-    h = F.xxhash64(*[F.col(c) for c in cols])
-    h2 = F.xxhash64(F.lit(-6742718), *[F.col(c) for c in cols])
-    fast_id = F.concat_ws("-", h.cast("string"), h2.cast("string"))
-    w = Window.partitionBy(h).orderBy(*[F.col(c) for c in cols])
-    window_id = F.concat_ws("-", h.cast("string"), F.row_number().over(w).cast("string"))
-    if assume_unique is True:
-        return spine.withColumn(SPINE_ROW_ID, fast_id)
-    if assume_unique is None or assume_unique is False:
-        return spine.withColumn(SPINE_ROW_ID, window_id)
-    if assume_unique != "probe":
-        raise ValueError(f"assume_unique must be True/False/None/'probe', got {assume_unique!r}")
-    # probe: hashes shared by >1 row. Deterministic regardless of spine
-    # lineage (it is a pure aggregate of row content), so re-evaluating
-    # it inside plan branches can never disagree; persisted because the
-    # broadcast side is referenced by every branch of the caller's plan.
-    max_dup_hashes = 4_000_000  # ~32 MB of longs — broadcastable
-    dup = (
-        spine.groupBy(h.alias("__feast_dup_h"))
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .filter(F.col("__c") > 1)
-        .select("__feast_dup_h")
-        .persist()
-    )
-    n_dup = dup.count()
-    if n_dup == 0:
-        dup.unpersist()
-        return spine.withColumn(SPINE_ROW_ID, fast_id)
-    if n_dup > max_dup_hashes:
-        dup.unpersist()
-        return spine.withColumn(SPINE_ROW_ID, window_id)
-    marked = spine.join(
-        F.broadcast(dup), h == F.col("__feast_dup_h"), "left"
-    )
-    fast = (
-        marked.filter(F.col("__feast_dup_h").isNull())
-        .drop("__feast_dup_h")
-        .withColumn(SPINE_ROW_ID, fast_id)
-    )
-    slow = (
-        marked.filter(F.col("__feast_dup_h").isNotNull())
-        .drop("__feast_dup_h")
-        .withColumn(SPINE_ROW_ID, window_id)
-    )
-    return fast.unionByName(slow)
-
-
-def _entityless_range_union(
-    spine: DataFrame,
-    features: DataFrame,
-    feature_cols: Sequence[str],
-    *,
-    spine_ts_col: str,
-    feature_ts_col: str,
-    created_col: str | None,
-    ttl_seconds: int | None,
-    include_feature_ts: bool,
-    tie_breaker_cols: Sequence[str],
-) -> DataFrame:
-    """Entityless as-of join with NO single-task stage — the
-    10⁹-row-spine scale path (``strategy="range_union"``).
-
-    Algorithm: tag feature and spine rows, union them, range-partition
-    the union by timestamp, and within each range partition take the
-    running ``last(feature, ignorenulls)`` in (ts, kind, created,
-    tie-break) order — features sort before spine rows at equal ts
-    (inclusive upper bound) and ascending created/tie-breaks make the
-    last feature the max-created one. Rows whose partition starts
-    after the last feature of earlier partitions get a CARRY-IN: one
-    max-by row per partition (a ≤ #partitions frame), cumulated with a
-    tiny single-task window (bounded by the partition count, never by
-    data), broadcast back. TTL is a final null-out on the carried
-    feature timestamp. Every stage is bounded: the big frames see one
-    range shuffle + one per-partition window; no group ever holds more
-    than its time slice. Output values are invariant to the (sampled,
-    possibly nondeterministic) range boundaries — a carry-in is
-    exactly what the window would have seen in a coarser partitioning.
-    Ties beyond (ts, created, tie_breaker_cols) are resolved
-    arbitrarily — the same tie class as the join/window strategies."""
-    reserved = ("__ts", "__f", "__row", "__pid", "__last", "__carry", "__best")
-    clash = [c for c in spine.columns if c in reserved]
-    if clash:
-        raise ValueError(f"spine columns {clash} collide with range_union internals")
-    tbs = list(tie_breaker_cols or [])
-    order_fields = [F.col(feature_ts_col).alias("__fts")]
-    if created_col:
-        order_fields.append(F.col(created_col).alias("__created"))
-    order_fields += [F.col(c).alias(f"__tb{i}") for i, c in enumerate(tbs)]
-    payload = [F.col(c).alias(f"__v_{c}") for c in feature_cols]
-    feats = features.filter(F.col(feature_ts_col).isNotNull()).select(
-        F.col(feature_ts_col).alias("__ts"),
-        F.struct(*order_fields, *payload).alias("__f"),
-    )
-    spine_cols = list(spine.columns)
-    sp = spine.select(
-        F.col(spine_ts_col).alias("__ts"),
-        F.struct(*[F.col(c) for c in spine_cols]).alias("__row"),
-    )
-    u = feats.withColumn(
-        "__row", F.lit(None).cast(sp.schema["__row"].dataType)
-    ).unionByName(sp.withColumn("__f", F.lit(None).cast(feats.schema["__f"].dataType)))
-    u = u.repartitionByRange(F.col("__ts")).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    order_cols = [F.col("__ts").asc(), F.col("__f").isNull().cast("int").asc()]
-    if created_col:
-        order_cols.append(F.col("__f.__created").asc_nulls_first())
-    for i in range(len(tbs)):
-        order_cols.append(F.col(f"__f.__tb{i}").asc_nulls_first())
-    w = Window.partitionBy("__pid").orderBy(*order_cols).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    u = u.withColumn("__last", F.last("__f", ignorenulls=True).over(w))
-    okey = F.struct(
-        F.col("__ts"),
-        *([F.col("__f.__created")] if created_col else []),
-        *[F.col(f"__f.__tb{i}") for i in range(len(tbs))],
-    )
-    per_pid = (
-        u.filter(F.col("__f").isNotNull())
-        .groupBy("__pid")
-        .agg(F.max_by("__f", okey).alias("__m"))
-    )
-    # carry frame: ONE row per range partition — its single-task window
-    # is bounded by spark.sql.shuffle.partitions, not by the data
-    cw = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        u.select("__pid")
-        .distinct()
-        .join(per_pid, "__pid", "left")
-        .withColumn("__carry", F.last("__m", ignorenulls=True).over(cw))
-        .select("__pid", "__carry")
-    )
-    out = (
-        u.filter(F.col("__row").isNotNull())
-        .join(F.broadcast(carry), "__pid", "left")
-        .withColumn("__best", F.coalesce("__last", "__carry"))
-    )
-    valid = F.col("__best").isNotNull()
-    if ttl_seconds and ttl_seconds > 0:
-        valid = valid & (
-            F.col("__best.__fts")
-            >= F.col("__ts") - F.expr(f"INTERVAL {int(ttl_seconds)} SECONDS")
-        )
-    best = F.when(valid, F.col("__best"))
-    sel = [F.col("__row").getField(c).alias(c) for c in spine_cols]
-    sel += [best.getField(f"__v_{c}").alias(c) for c in feature_cols]
-    if include_feature_ts:
-        sel.append(best.getField("__fts").alias("__feature_ts"))
-    return out.select(*sel)
-
-
-def _ttl_lower_bound(ts_col: str, entity_ts: Column, ttl_seconds: int | None) -> Column:
-    cond = F.col(ts_col) <= entity_ts
-    if ttl_seconds and ttl_seconds > 0:
-        cond = cond & (
-            F.col(ts_col) >= entity_ts - F.expr(f"INTERVAL {int(ttl_seconds)} SECONDS")
-        )
-    return cond
+_TS, _FEAT, _ROW = "__asof_ts", "__asof_feature", "__asof_spine"
 
 
 def point_in_time_join(
@@ -303,11 +60,9 @@ def point_in_time_join(
     feature_ts_col: str = "event_timestamp",
     created_col: str | None = None,
     ttl_seconds: int | None = None,
-    strategy: str = "join_dedup",
     include_feature_ts: bool = False,
     tie_breaker_cols: Sequence[str] = (),
     feature_prefix: str = "",
-    spine_assume_unique: bool | str | None = None,
 ) -> DataFrame:
     """As-of join ``features`` onto ``spine`` (see module docstring).
 
@@ -317,376 +72,67 @@ def point_in_time_join(
     (key, ts, created) rows exist and bit-exact reproducibility matters.
     ``feature_prefix`` renames output feature columns (``prefix + name``)
     — required when a feature column name already exists on the spine.
-    ``spine_assume_unique`` routes the internal row-id stamp (see
-    ``_with_row_id``): None/False (default) = duplicate-safe window,
-    True = caller guarantees no fully-duplicate spine rows (map-only
-    stamp, no shuffle — the 10¹²-row escape hatch), "probe" = probe +
-    split (window only the duplicated rows).
     Returns spine columns + feature columns (+ ``feature_ts_col`` as
     ``__feature_ts`` when ``include_feature_ts``).
     """
-    join_keys = list(join_keys)
-    if feature_prefix:
-        excluded0 = set(join_keys) | {feature_ts_col}
-        if created_col:
-            excluded0.add(created_col)
-        rename = {
-            c: feature_prefix + c
-            for c in (feature_cols if feature_cols is not None
-                      else [c for c in features.columns if c not in excluded0])
-        }
-        features = features.select(
-            *[F.col(c).alias(rename.get(c, c)) for c in features.columns]
-        )
-        feature_cols = [rename[c] for c in rename] if feature_cols is None else [
-            rename.get(c, c) for c in feature_cols
-        ]
-        tie_breaker_cols = [rename.get(c, c) for c in tie_breaker_cols]
-    _cols_now = feature_cols if feature_cols is not None else [
-        c for c in features.columns
-        if c not in set(join_keys) | {feature_ts_col, created_col}
-    ]
-    collisions = set(_cols_now) & set(spine.columns)
+    keys = list(join_keys)
+    if feature_cols is None:
+        meta = set(keys) | {feature_ts_col, created_col}
+        feature_cols = [c for c in features.columns if c not in meta]
+    names = [feature_prefix + c for c in feature_cols]
+    collisions = set(names) & set(spine.columns)
     if collisions:
         raise ValueError(
             f"feature columns {sorted(collisions)} collide with spine columns; "
-            "pass feature_prefix=... or rename via field_mapping"
+            "pass feature_prefix=... (full_feature_names=True in FeatureStore) "
+            "or rename via field_mapping"
         )
-    if not join_keys:
-        # Entityless view (reference DUMMY_ENTITY, feature_view.py:49-58):
-        # degrade to an as-of join on timestamp alone via a constant key.
-        # STRATEGY OVERRIDE: the dummy entity is the ultimate hot key —
-        # every spine row and every feature row share it, so the
-        # conditional-join strategies materialize the full
-        # spine × features-within-TTL pair set on ONE task (quadratic:
-        # 20k spine × 4k in-window rows ≈ 80M pair rows at sf0.1, >60 s
-        # measured). The cogrouped Arrow merge_asof is linear for a
-        # single group (one sort + one merge pass, ~1 s on the same
-        # input), so entityless always routes there unless the caller
-        # explicitly forced a join strategy. A 10⁹-row spine would
-        # still serialize on the one group — pass
-        # strategy="range_union" for the fully distributed path
-        # (range-partitioned union + per-partition carry-in,
-        # _entityless_range_union below): no single-task stage at any
-        # spine size.
-        if strategy == "range_union":
-            return _entityless_range_union(
-                spine,
-                features,
-                _cols_now,
-                spine_ts_col=spine_ts_col,
-                feature_ts_col=feature_ts_col,
-                created_col=created_col,
-                ttl_seconds=ttl_seconds,
-                include_feature_ts=include_feature_ts,
-                tie_breaker_cols=tie_breaker_cols,
-            )
-        spine = spine.withColumn(DUMMY_ENTITY_COL, F.lit(""))
-        features = features.withColumn(DUMMY_ENTITY_COL, F.lit(""))
-        out = point_in_time_join(
-            spine,
-            features,
-            [DUMMY_ENTITY_COL],
-            feature_cols,
-            spine_ts_col=spine_ts_col,
-            feature_ts_col=feature_ts_col,
-            created_col=created_col,
-            ttl_seconds=ttl_seconds,
-            strategy="merge_asof" if strategy in ("auto", "join_dedup") else strategy,
-            include_feature_ts=include_feature_ts,
-            tie_breaker_cols=tie_breaker_cols,
-            spine_assume_unique=spine_assume_unique,
-        )
-        return out.drop(DUMMY_ENTITY_COL)
+    internal = {_TS, _FEAT, _ROW} | ({"__feature_ts"} if include_feature_ts else set())
+    clash = internal & set(spine.columns)
+    if clash:
+        raise ValueError(f"spine columns {sorted(clash)} collide with as-of join internals")
+    tie_breaks = list(tie_breaker_cols)
 
-    excluded = set(join_keys) | {feature_ts_col}
+    # order on one timestamp type: the union would otherwise widen a
+    # timestamp/string mix to string and sort lexically
+    f_ts, s_ts = F.col(feature_ts_col), F.col(spine_ts_col)
+    if features.schema[feature_ts_col].dataType != spine.schema[spine_ts_col].dataType:
+        f_ts, s_ts = f_ts.cast("timestamp"), s_ts.cast("timestamp")
+    feat = F.struct(
+        F.col(feature_ts_col).alias("ts"),
+        *([F.col(created_col).alias("created")] if created_col else []),
+        *[F.col(c).alias(f"tb{i}") for i, c in enumerate(tie_breaks)],
+        *[F.col(c).alias(f"v{i}") for i, c in enumerate(feature_cols)],
+    )
+    present = F.col(feature_ts_col).isNotNull()
+    for k in keys:
+        present = present & F.col(k).isNotNull()
+    f = features.filter(present).select(*keys, f_ts.alias(_TS), feat.alias(_FEAT))
+    s = spine.select(*keys, s_ts.alias(_TS), F.struct(*spine.columns).alias(_ROW))
+    union = f.withColumn(_ROW, F.lit(None).cast(s.schema[_ROW].dataType)).unionByName(
+        s.withColumn(_FEAT, F.lit(None).cast(f.schema[_FEAT].dataType))
+    )
+
+    order = [F.col(_TS), F.col(_FEAT).isNull()]  # features sort first at equal ts
     if created_col:
-        excluded.add(created_col)
-    if feature_cols is None:
-        feature_cols = [c for c in features.columns if c not in excluded]
-    feature_cols = list(feature_cols)
-
-    if strategy == "auto":
-        strategy = _pick_strategy(features)
-    if strategy in ("join_dedup", "broadcast"):
-        return _pit_join_dedup(
-            spine,
-            features,
-            join_keys,
-            feature_cols,
-            spine_ts_col,
-            feature_ts_col,
-            created_col,
-            ttl_seconds,
-            broadcast=(strategy == "broadcast"),
-            include_feature_ts=include_feature_ts,
-            tie_breaker_cols=tie_breaker_cols,
-            spine_assume_unique=spine_assume_unique,
-        )
-    if strategy == "merge_asof":
-        return _pit_merge_asof(
-            spine,
-            features,
-            join_keys,
-            feature_cols,
-            spine_ts_col,
-            feature_ts_col,
-            created_col,
-            ttl_seconds,
-            include_feature_ts=include_feature_ts,
-            tie_breaker_cols=tie_breaker_cols,
-            spine_assume_unique=spine_assume_unique,
-        )
-    raise ValueError(f"unknown strategy {strategy!r}")
-
-
-BROADCAST_THRESHOLD_BYTES = 100 * 1024 * 1024  # Ray's default, ray.py:437-448
-
-
-def _pick_strategy(features: DataFrame) -> str:
-    """Auto physical-strategy choice: broadcast when Catalyst's size
-    estimate for the feature side is under the Ray store's 100 MB
-    threshold (ray.py:437-448); otherwise the Catalyst-native
-    join_dedup. The Arrow merge_asof path stays opt-in — it wins when
-    per-key version fan-out makes the conditional join's intermediate
-    explode, which a size estimate can't see (measured 3.5x faster on a
-    2M-version hot key; BENCH/BASELINE.md "Hot-key fan-out A/B")."""
-    try:
-        size = features._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        if int(size.toString() if hasattr(size, "toString") else size) <= BROADCAST_THRESHOLD_BYTES:
-            return "broadcast"
-    except Exception:
-        pass
-    return "join_dedup"
-
-
-def _pit_join_dedup(
-    spine: DataFrame,
-    features: DataFrame,
-    join_keys: list[str],
-    feature_cols: list[str],
-    spine_ts_col: str,
-    feature_ts_col: str,
-    created_col: str | None,
-    ttl_seconds: int | None,
-    *,
-    broadcast: bool,
-    include_feature_ts: bool,
-    tie_breaker_cols: Sequence[str],
-    spine_assume_unique: bool | str | None = None,
-) -> DataFrame:
-    s = _with_row_id(spine, assume_unique=spine_assume_unique)
-    # Column pruning before the shuffle: keys + ts + features only
-    # (reference does the same via _get_column_names, utils.py:145-207).
-    f_needed = list(
-        dict.fromkeys(
-            join_keys
-            + [feature_ts_col]
-            + ([created_col] if created_col else [])
-            + feature_cols
-            + list(tie_breaker_cols)
-        )
+        order.append(F.col(_FEAT).getField("created").asc_nulls_first())
+    order += [F.col(_FEAT).getField(f"tb{i}").asc_nulls_first() for i in range(len(tie_breaks))]
+    w = Window.partitionBy(*keys).orderBy(*order).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
-    f = features.select(*f_needed)
-    if broadcast:
-        f = F.broadcast(f)
+    matched = union.select(
+        _TS, _ROW, F.last(_FEAT, ignorenulls=True).over(w).alias(_FEAT)
+    ).filter(F.col(_ROW).isNotNull())
 
-    spine_side = s.select(
-        *join_keys, F.col(spine_ts_col).alias(_ENTITY_TS_TAG), SPINE_ROW_ID
-    )
-    cond = _ttl_lower_bound(feature_ts_col, F.col(_ENTITY_TS_TAG), ttl_seconds)
-    joined = spine_side.join(f, on=join_keys, how="inner").filter(cond)
-
-    order = [F.col(feature_ts_col).desc()]
-    if created_col:
-        order.append(F.col(created_col).desc())
-    order += [F.col(c).desc() for c in tie_breaker_cols]
-    w = Window.partitionBy(SPINE_ROW_ID).orderBy(*order)
-    latest = (
-        joined.withColumn("__feast_rn", F.row_number().over(w))
-        .filter(F.col("__feast_rn") == 1)
-        .select(
-            SPINE_ROW_ID,
-            *feature_cols,
-            F.col(feature_ts_col).alias("__feature_ts"),
-        )
-    )
-    out = s.join(latest, on=SPINE_ROW_ID, how="left")
-    keep = spine.columns + feature_cols + (["__feature_ts"] if include_feature_ts else [])
-    return out.select(*keep)
-
-
-def _pit_merge_asof(
-    spine: DataFrame,
-    features: DataFrame,
-    join_keys: list[str],
-    feature_cols: list[str],
-    spine_ts_col: str,
-    feature_ts_col: str,
-    created_col: str | None,
-    ttl_seconds: int | None,
-    *,
-    include_feature_ts: bool,
-    tie_breaker_cols: Sequence[str],
-    spine_assume_unique: bool | str | None = None,
-) -> DataFrame:
-    """Cogrouped sorted-merge as-of join (Arrow-vectorized).
-
-    Physical design, tuned for wide payloads (token arrays):
-
-    * Cogrouping is on a HASH BUCKET of the join keys, not the raw keys:
-      with millions of doc_ids, per-key cogroups would mean millions of
-      tiny pandas invocations (measured 5x slower at sf0.1). Bucketing
-      to ~4x parallelism groups keeps Arrow batches large, and pandas
-      ``merge_asof(by=keys)`` does the per-key as-of logic vectorized
-      inside each bucket.
-    * The pandas stage matches on NARROW rows only — (keys, ts, row id)
-      — and returns (spine_row_id, matched __feature_ts). Feature
-      payloads (token arrays etc.) never cross the JVM↔Arrow↔pandas
-      boundary; they are re-attached JVM-side by joining the match back
-      on (keys, ts) against a per-(keys, ts) winner table (max created,
-      then tie-breaks — exactly the row the as-of semantics select).
-      For 300-byte token payloads this cuts the Python-side traffic
-      ~10x, and unlike a synthetic feature-row id it is deterministic
-      under nondeterministic shuffle lineage (no
-      ``monotonically_increasing_id`` evaluated in two plan branches).
-    * A hot key still lands in one bucket but shares it with ~K/B other
-      keys; the per-bucket merge is linear in bucket size.
-    """
-    from pyspark.sql import types as T
-
-    s = _with_row_id(spine, assume_unique=spine_assume_unique)
-
-    keys = list(join_keys)
-    tiebreaks = list(tie_breaker_cols)
-
-    def _micros(frame: DataFrame, col: str) -> Column:
-        """Epoch-microsecond long of a timestamp column. The pandas stage
-        and the payload re-attach join run entirely on these longs —
-        timestamps never round-trip JVM→pandas→JVM, so non-UTC session
-        timezones (DST-ambiguous local times) cannot shift a value and
-        silently miss the equi-join."""
-        c = F.col(col)
-        if frame.schema[col].dataType.typeName() == "timestamp_ntz":
-            c = c.cast("timestamp")
-        return F.unix_micros(c)
-
-    # the pandas stage only decides WHICH (keys, ts) wins per spine row;
-    # created/tie-break resolution happens in the JVM-side winner dedup,
-    # so narrow rows are just (keys, ts-micros)
-    narrow_s = s.select(
-        *keys, _micros(s, spine_ts_col).alias("__s_us"), SPINE_ROW_ID
-    )
-    narrow_f = features.select(
-        *keys, _micros(features, feature_ts_col).alias("__f_us")
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(SPINE_ROW_ID, T.StringType(), False),
-            T.StructField("__f_us", T.LongType(), True),
-        ]
-    )
-
-    ttl_us = int(ttl_seconds) * 1_000_000 if ttl_seconds else 0
-
-    def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(
-                {
-                    SPINE_ROW_ID: pd.Series([], dtype="object"),
-                    "__f_us": pd.array([], dtype="Int64"),
-                }
-            )
-        left = left.sort_values("__s_us", kind="mergesort")
-        if right.empty:
-            return pd.DataFrame(
-                {
-                    SPINE_ROW_ID: left[SPINE_ROW_ID],
-                    "__f_us": pd.array([None] * len(left), dtype="Int64"),
-                }
-            )
-        right = right.drop_duplicates([*keys, "__f_us"]).sort_values(
-            "__f_us", kind="mergesort"
-        )
-        merged = pd.merge_asof(
-            left[[*keys, "__s_us", SPINE_ROW_ID]],
-            right[[*keys, "__f_us"]],
-            left_on="__s_us",
-            right_on="__f_us",
-            by=keys,
-            direction="backward",
-            allow_exact_matches=True,
-            tolerance=ttl_us if ttl_us > 0 else None,
-        )
-        return pd.DataFrame(
-            {
-                SPINE_ROW_ID: merged[SPINE_ROW_ID],
-                "__f_us": merged["__f_us"].astype("Int64"),
-            }
-        )
-
-    n_buckets = spine.sparkSession.sparkContext.defaultParallelism * 4
-    s_b = narrow_s.withColumn("__b", F.pmod(F.hash(*keys), F.lit(n_buckets)))
-    # Prefix-rename the feature side: when spine and features derive from
-    # the same source relation, both sides carry attributes with equal
-    # exprIds and Spark's cogroup deduplication silently prunes the
-    # right-side copies. Fresh names guarantee fresh attributes; the
-    # pandas fn strips the prefix.
-    f_r = narrow_f.select(*[F.col(c).alias(f"__r_{c}") for c in narrow_f.columns])
-    f_b = f_r.withColumn(
-        "__b", F.pmod(F.hash(*[f"__r_{k}" for k in keys]), F.lit(n_buckets))
-    )
-    grouped = s_b.groupBy("__b").cogroup(f_b.groupBy("__b"))
-
-    def merge_bucket(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        right = right.drop(columns="__b", errors="ignore").rename(
-            columns=lambda c: c.removeprefix("__r_")
-        )
-        return merge(left.drop(columns="__b", errors="ignore"), right)
-
-    matched = grouped.applyInPandas(
-        lambda left, right: merge_bucket(left, right), out_schema
-    )
-
-    # JVM-side payload re-attach: the as-of winner per (keys, ts) is the
-    # max-created (then tie-break) row — one window dedup, then an
-    # equi-join on (keys, matched ts-micros). Fully deterministic (no
-    # synthetic row id shared across plan branches, no timestamp
-    # round-trip).
-    order = ([F.col(created_col).desc()] if created_col else []) + [
-        F.col(c).desc() for c in tiebreaks
-    ]
-    if not order:
-        order = [F.lit(1)]
-    wwin = Window.partitionBy(*keys, feature_ts_col).orderBy(*order)
-    winner = (
-        features.select(
-            *dict.fromkeys(
-                keys
-                + [feature_ts_col]
-                + ([created_col] if created_col else [])
-                + tiebreaks
-                + list(feature_cols)
-            )
-        )
-        .withColumn("__feast_rn", F.row_number().over(wwin))
-        .filter(F.col("__feast_rn") == 1)
-        .select(
-            *keys,
-            _micros(features, feature_ts_col).alias("__f_us"),
-            F.col(feature_ts_col).alias("__feature_ts"),
-            *feature_cols,
-        )
-    )
-    out = (
-        s.join(matched, on=SPINE_ROW_ID, how="left")
-        .join(winner, on=[*keys, "__f_us"], how="left")
-    )
-    keep = spine.columns + list(feature_cols) + (
-        ["__feature_ts"] if include_feature_ts else []
-    )
-    return out.select(*keep)
+    hit = F.col(_FEAT)
+    if ttl_seconds and ttl_seconds > 0:
+        lower = F.col(_TS) - F.expr(f"INTERVAL {int(ttl_seconds)} SECONDS")
+        hit = F.when(hit.getField("ts") >= lower, hit)
+    out = [F.col(_ROW).getField(c).alias(c) for c in spine.columns]
+    out += [hit.getField(f"v{i}").alias(n) for i, n in enumerate(names)]
+    if include_feature_ts:
+        out.append(hit.getField("ts").alias("__feature_ts"))
+    return matched.select(*out)
 
 
 def multi_view_pit_join(
@@ -694,24 +140,20 @@ def multi_view_pit_join(
     views: Iterable[tuple[DataFrame, Sequence[str], dict]],
     *,
     spine_ts_col: str = "event_timestamp",
-    strategy: str = "join_dedup",
-    spine_assume_unique: bool | str | None = None,
 ) -> DataFrame:
     """Join several feature views onto one spine, each with PIT semantics.
 
     ``views`` yields ``(features_df, join_keys, opts)`` where ``opts`` may
     carry ``feature_cols``, ``feature_ts_col``, ``created_col``,
-    ``ttl_seconds``, ``prefix``. Results are accumulated on the spine via
-    the internal row id — the fan-out/fan-in plan of the reference's
-    SparkJoinNode (compute_engines/spark/nodes.py:150-211) without the
-    string row-key artifact.
+    ``ttl_seconds``, ``prefix`` (output columns become
+    ``{prefix}__{name}``). The views fold left: each view's output is the
+    next view's spine, so the spine needs no row id and no fan-in join.
     """
-    acc = _with_row_id(spine, assume_unique=spine_assume_unique)
-    base = acc
+    out = spine
     for features, join_keys, opts in views:
         prefix = opts.get("prefix")
-        res = point_in_time_join(
-            base,
+        out = point_in_time_join(
+            out,
             features,
             join_keys,
             opts.get("feature_cols"),
@@ -719,12 +161,6 @@ def multi_view_pit_join(
             feature_ts_col=opts.get("feature_ts_col", "event_timestamp"),
             created_col=opts.get("created_col"),
             ttl_seconds=opts.get("ttl_seconds"),
-            strategy=opts.get("strategy", strategy),
+            feature_prefix=f"{prefix}__" if prefix else "",
         )
-        new_cols = [c for c in res.columns if c not in base.columns]
-        sel = res.select(SPINE_ROW_ID, *new_cols)
-        if prefix:
-            for c in new_cols:
-                sel = sel.withColumnRenamed(c, f"{prefix}__{c}")
-        acc = acc.join(sel, on=SPINE_ROW_ID, how="left")
-    return acc.drop(SPINE_ROW_ID)
+    return out

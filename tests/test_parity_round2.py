@@ -377,8 +377,9 @@ def test_sql_odfv_with_brace_literals(spark, store_with_view):
 
 
 def test_merge_asof_non_utc_session_timezone(spark):
-    """Timestamps never round-trip through pandas in the merge_asof path,
-    so a DST session timezone cannot shift them (code-review finding)."""
+    """A DST session timezone cannot shift the as-of match: an ambiguous
+    fall-back-hour local time still orders correctly (code-review
+    finding)."""
     from feast_spark.operators.asof_join import point_in_time_join
 
     old = spark.conf.get("spark.sql.session.timeZone")
@@ -398,9 +399,7 @@ def test_merge_asof_non_utc_session_timezone(spark):
             "doc_id string, ts_str string",
         ).select("doc_id", F.to_timestamp("ts_str").alias("event_timestamp"))
         got = (
-            point_in_time_join(
-                spine, feats, ["doc_id"], ["val"], strategy="merge_asof"
-            )
+            point_in_time_join(spine, feats, ["doc_id"], ["val"])
             .toPandas()
             .sort_values("event_timestamp")
         )
@@ -410,22 +409,19 @@ def test_merge_asof_non_utc_session_timezone(spark):
 
 
 def test_store_multi_view_merge_asof_strategy(spark, store_with_view):
-    """FeatureStore retrieval with the Arrow merge_asof physical strategy
-    must equal the Catalyst join_dedup default."""
+    """FeatureStore retrieval must equal the brute-force oracle."""
+    from tests.oracle import expected_pit_df
+
     store, spine = store_with_view
-    a = (
-        store.get_historical_features(spine, ["vals:val"], strategy="join_dedup")
-        .to_df()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
+    spine_pd = spine.toPandas()
+    feats = store._build_view_df(store.get_feature_view("vals")).toPandas()
+    got = store.get_historical_features(spine, ["vals:val"]).to_df()
+    exp = expected_pit_df(spine_pd, feats, ["doc_id"], feature_cols=["val"])
+    a, b = (
+        df[["doc_id", "val"]].sort_values("doc_id").reset_index(drop=True)
+        for df in (got, exp)
     )
-    b = (
-        store.get_historical_features(spine, ["vals:val"], strategy="merge_asof")
-        .to_df()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a[["doc_id", "val"]], b[["doc_id", "val"]])
+    pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
 def test_materialize_aggregated_view(spark, tmp_path):

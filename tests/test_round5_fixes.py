@@ -209,6 +209,21 @@ def _sorted_rows(df):
     )
 
 
+def _oracle_rows(spine, feats, **kw):
+    """(sid, gval) of the brute-force entityless as-of answer."""
+    import pandas as pd
+
+    from tests.oracle import expected_pit_df
+
+    exp = expected_pit_df(
+        spine.toPandas(), feats.toPandas(), [], feature_cols=["gval"], **kw
+    )
+    return sorted(
+        (int(sid), None if pd.isna(g) else float(g))
+        for sid, g in zip(exp["sid"], exp["gval"])
+    )
+
+
 def test_entityless_range_union_matches_merge_asof(spark):
     from datetime import datetime, timedelta
 
@@ -235,20 +250,17 @@ def test_entityless_range_union_matches_merge_asof(spark):
         ],
         "sid long, event_timestamp timestamp",
     )
-    kw = dict(
-        created_col="created", ttl_seconds=86400, include_feature_ts=True
-    )
-    a = point_in_time_join(
-        spine, feats, [], ["gval"], strategy="merge_asof", **kw
-    )
-    b = point_in_time_join(
-        spine, feats, [], ["gval"], strategy="range_union", **kw
-    )
-    assert _sorted_rows(a.select("sid", "gval", "__feature_ts")) == _sorted_rows(
-        b.select("sid", "gval", "__feature_ts")
-    )
-    got = {r["sid"]: r["gval"] for r in b.collect()}
-    assert got == {1: None, 2: 11.0, 3: 50.0, 4: None, 5: 99.0}
+    kw = dict(created_col="created", ttl_seconds=86400)
+    out = point_in_time_join(spine, feats, [], ["gval"], include_feature_ts=True, **kw)
+    assert _sorted_rows(out.select("sid", "gval")) == _oracle_rows(spine, feats, **kw)
+    got = {r["sid"]: (r["gval"], r["__feature_ts"]) for r in out.collect()}
+    assert got == {
+        1: (None, None),
+        2: (11.0, t0 + timedelta(hours=1)),
+        3: (50.0, t0 + timedelta(hours=5)),
+        4: (None, None),
+        5: (99.0, t0 + timedelta(days=3)),
+    }
 
 
 def test_entityless_range_union_empty_features(spark):
@@ -263,14 +275,13 @@ def test_entityless_range_union_empty_features(spark):
         [], "event_timestamp timestamp, created timestamp, gval double"
     )
     out = point_in_time_join(
-        spine, feats, [], ["gval"], created_col="created", strategy="range_union"
+        spine, feats, [], ["gval"], created_col="created"
     ).collect()
     assert len(out) == 1 and out[0]["gval"] is None
 
 
 def test_entityless_range_union_matches_merge_asof_bulk(spark):
-    # 5k spine x 2k features across many range partitions: carry-in
-    # rows must reproduce the single-group merge exactly
+    # 5k spine x 2k features, many spine rows per feature version
     from feast_spark.operators.asof_join import point_in_time_join
     from pyspark.sql import functions as SF
 
@@ -291,11 +302,8 @@ def test_entityless_range_union_matches_merge_asof_bulk(spark):
         ),
     )
     kw = dict(created_col="created", ttl_seconds=7 * 86400)
-    a = point_in_time_join(spine, feats, [], ["gval"], strategy="merge_asof", **kw)
-    b = point_in_time_join(spine, feats, [], ["gval"], strategy="range_union", **kw)
-    assert _sorted_rows(a.select("sid", "gval")) == _sorted_rows(
-        b.select("sid", "gval")
-    )
+    out = point_in_time_join(spine, feats, [], ["gval"], **kw)
+    assert _sorted_rows(out.select("sid", "gval")) == _oracle_rows(spine, feats, **kw)
 
 
 def test_dedup_spans_cache_grams_off_matches(spark):

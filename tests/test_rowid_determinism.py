@@ -1,69 +1,28 @@
-"""Regression tests for the deterministic spine row id (VERDICT r01 #1,
-ADVICE high).
+"""Regression tests for spine row identity under nondeterministic
+lineage (VERDICT r01 #1, ADVICE high).
 
-The failure mode being guarded: the internal spine row id used to be
-``monotonically_increasing_id``, which is evaluated independently in
-each plan branch — with a nondeterministic shuffle in the spine lineage
-(round-robin repartition, AQE-coalesced reads) or with the accumulated
-multi-view frame reused as a spine, the two evaluations can disagree
-and features silently attach to wrong rows. ADVICE confirmed 1778/2000
-wrong rows for the 2nd view under the shuffle-join regime
-(autoBroadcastJoinThreshold=-1). The id is now content-derived
-(xxhash64 + within-hash row_number) and ``_with_row_id`` is idempotent.
+The failure mode being guarded: a spine whose lineage contains a
+nondeterministic shuffle (round-robin repartition, AQE-coalesced reads)
+is evaluated more than once when a plan joins results back to it, and
+the evaluations can disagree — features silently attach to wrong rows.
+ADVICE confirmed 1778/2000 wrong rows for the 2nd view under the
+shuffle-join regime (autoBroadcastJoinThreshold=-1) when the spine
+carried ``monotonically_increasing_id``. The as-of join now carries
+each spine row through the join as a struct, so there is nothing to
+join back.
 """
 
-from datetime import timedelta
-
 import pandas as pd
-import pytest
-
-from pyspark.sql import functions as F
 
 from feast_spark import datagen
 from feast_spark.core.feature_view import Entity, FeatureView
 from feast_spark.core.source import DataFrameSource
 from feast_spark.core.store import FeatureStore
-from feast_spark.operators.asof_join import (
-    SPINE_ROW_ID,
-    _with_row_id,
-    point_in_time_join,
-)
+from feast_spark.operators.asof_join import point_in_time_join
 from tests.oracle import expected_pit_df
 
 
-def test_with_row_id_idempotent(spark):
-    pdf = pd.DataFrame({"doc_id": ["a", "b"], "event_timestamp": pd.to_datetime(["2024-01-01", "2024-01-02"])})
-    df = datagen.to_spark(spark, pdf)
-    once = _with_row_id(df)
-    twice = _with_row_id(once)
-    assert twice is once  # no re-stamping
-    assert once.columns.count(SPINE_ROW_ID) == 1
-
-
-def test_row_id_unique_and_deterministic_after_shuffle(spark):
-    """Ids must be unique per row (duplicates included) and identical
-    across two independent evaluations of a round-robin-repartitioned
-    (nondeterministic-order) spine."""
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [f"d{i % 7}" for i in range(200)] + ["dup"] * 5,
-            "event_timestamp": pd.to_datetime("2024-01-01"),
-        }
-    )
-    spine = datagen.to_spark(spark, pdf).repartition(8)  # round-robin
-    stamped = _with_row_id(spine)
-    a = stamped.toPandas()
-    b = stamped.toPandas()  # independent evaluation
-    assert a[SPINE_ROW_ID].is_unique and b[SPINE_ROW_ID].is_unique
-    key = ["doc_id", SPINE_ROW_ID]
-    pd.testing.assert_frame_equal(
-        a.sort_values(key).reset_index(drop=True)[key],
-        b.sort_values(key).reset_index(drop=True)[key],
-    )
-
-
-@pytest.mark.parametrize("strategy", ["join_dedup", "merge_asof"])
-def test_pit_join_round_robin_spine_matches_oracle(spark, strategy):
+def test_pit_join_round_robin_spine_matches_oracle(spark):
     """VERDICT's named regression: PIT join over a round-robin
     ``repartition(8)``-ed spine must still match the pandas oracle."""
     feats = datagen.token_sequences(n_docs=40, versions_per_doc=4, seed=3)
@@ -77,7 +36,6 @@ def test_pit_join_round_robin_spine_matches_oracle(spark, strategy):
         ["n_tok"],
         created_col="created",
         ttl_seconds=3 * 86400,
-        strategy=strategy,
     ).toPandas()
     exp = expected_pit_df(
         spine,

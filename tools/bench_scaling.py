@@ -113,8 +113,8 @@ partition-count-independent), two fresh local JVMs.
 **scaling efficiency = {result['throughput_4N']} / (4 x {result['throughput_N']})
 = {result['scaling_efficiency']}** (target >= 0.8: {"PASS" if result['pass'] else "FAIL"})
 
-Headline job: PIT as-of join (strategy per $BENCH_STRATEGY, default
-join_dedup — Catalyst conditional-join + window dedup) of a
+Headline job: PIT as-of join (tagged union + running
+last(ignorenulls) per key) of a
 {result['rows']:,}-row spine against ~{os.environ.get('BENCH_SEQ_DOCS', '100000')}x{os.environ.get('BENCH_SEQ_VERSIONS', '6')}
 token-sequence rows (TTL 3d, created tie-break), then lag/lead +
 trailing-24h rolling sum + inactivity-gap sessionization, materialized
@@ -124,13 +124,14 @@ the materialization path are covered by MaterializationManifest
 
 Caveat: local mode shares one JVM/page cache; true multi-node scaling
 additionally pays network shuffle. The job was designed to keep that
-cost low at cluster scale: one hash shuffle per side keyed on doc_id,
+cost low at cluster scale: one hash shuffle of the union keyed on doc_id,
 map-side combinable aggregations, no driver collects in the hot path.
 
 ## Saturation analysis (why N={n} and not 8)
 
 Measured on this sandbox (Firecracker VM, 32 vCPU, single shared
-memory bus): the identical job in fresh JVMs plateaus beyond ~8
+memory bus), with the as-of join's earlier join_dedup and merge_asof
+paths: the identical job in fresh JVMs plateaus beyond ~8
 threads — join_dedup 2->8 cores = 3.76x (0.94 efficiency), but
 8->32 = only ~1.3x for join_dedup and ~1.0x for the Arrow merge_asof
 path. `lscpu` shows 32 non-SMT vCPUs, so the plateau is shared
